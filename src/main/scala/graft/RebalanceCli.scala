@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 import graft.catalog.TableRegistry
-import graft.rebalance.{RebalanceRunner, Rebalancer}
+import graft.rebalance.{RebalanceRunner, Rebalancer, ShadowSwap}
 
 /** CLI entry point for the rebalance workflow — the engine's analogue of the
   * reference tool's `python sharding_recreation.py` invocation (reference
@@ -18,9 +18,9 @@ import graft.rebalance.{RebalanceRunner, Rebalancer}
   * has that column, round-robin otherwise), and prints per-table moved-row
   * counts.
   *
-  * `--plan` prints, per table, the exact shadow-swap steps
-  * [[RebalanceRunner.rebalanceTable]] would execute (shadow write with its
-  * distribution → two metadata renames → drop of the old copy) and exits
+  * `--plan` prints the tables [[RebalanceRunner.targets]] selects and, per
+  * table, its distribution and the steps its [[ShadowSwap]] would run
+  * (replayed over an in-memory copy of the catalog listing), and exits
   * WITHOUT touching any table — the preview a destructive rename/drop
   * pipeline should offer (the reference tool has no equivalent:
   * `sharding_recreation.py:268-306` connects and executes in one motion).
@@ -82,24 +82,23 @@ object RebalanceCli {
         case _               => Rebalancer.RoundRobin
       }
     }
+    val version = "1"
     if (planOnly) {
-      // mirror rebalanceDatabase's table selection so the preview shows
-      // exactly the per-table shadow-swap the runner would execute
-      var step = 0
-      def p(s: String): Unit = { step += 1; println(f"[cli] plan $step%3d: $s") }
-      tables.foreach { t =>
-        val rows = spark.table(s"$db.$t").count()
-        p(s"WRITE  $db.${t}__v1 <- ${distFor(t)} over $shards shards " +
-          s"($rows rows, one shuffle)")
-        p(s"RENAME $db.$t -> $db.${t}__old (metadata only)")
-        p(s"RENAME $db.${t}__v1 -> $db.$t (metadata only)")
-        p(s"DROP   $db.${t}__old")
+      // the runner's own selection and swap, replayed over the listing in
+      // memory: nothing is read or written
+      val listing = TableRegistry.tableNames(spark, db)
+      val picked = RebalanceRunner.targets(listing, Set.empty, version)
+      val dry = new ShadowSwap.Dry(listing.map(t => s"$db.$t"))
+      picked.foreach { t =>
+        ShadowSwap.swap(dry, ShadowSwap.versioned(s"$db.$t", version))(
+          dry.write(_, s"${distFor(t)} over $shards shards (one shuffle)"))
       }
-      println(s"""[cli] {"plan_steps":$step,"executed":0}""")
+      dry.steps.zipWithIndex.foreach { case (step, i) => println(f"[cli] plan ${i + 1}%3d: $step") }
+      println(s"""[cli] {"tables":${picked.size},"plan_steps":${dry.steps.size},"executed":0}""")
       spark.stop()
       return
     }
-    val moved = RebalanceRunner.rebalanceDatabase(spark, db, distFor, shards, "1")
+    val moved = RebalanceRunner.rebalanceDatabase(spark, db, distFor, shards, version)
     moved.toSeq.sortBy(_._1).foreach { case (t, n) =>
       println(s"[cli] rebalanced $t: $n rows -> $shards shards (${distFor(t)})")
     }

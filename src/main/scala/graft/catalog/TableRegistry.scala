@@ -39,8 +39,4 @@ object TableRegistry {
         .replaceAll("`([A-Za-z0-9_]+)`\\.`([A-Za-z0-9_]+)`", "$1.$2")
       CatalogEntry(t, ddl)
     }
-
-  /** EXISTS probe (reference O7, `sharding_recreation.py:216-217,236-237`). */
-  def exists(spark: SparkSession, db: String, table: String): Boolean =
-    spark.catalog.tableExists(s"$db.$table")
 }

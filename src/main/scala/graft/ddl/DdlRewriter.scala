@@ -16,25 +16,6 @@ import graft.model.TableKind
   */
 object DdlRewriter {
 
-  /** Inject `ON CLUSTER '<cluster>'` — before `TO` for MVs, before the first
-    * `(` for plain tables (reference `sharding_recreation.py:49-59`). MVs
-    * without a `TO` clause pass through unchanged (the reference logs a
-    * warning and skips them the same way).
-    */
-  def addOnCluster(name: String, ddl: String, cluster: String): String = {
-    val clause = s"ON CLUSTER '$cluster' "
-    TableKind.classify(name) match {
-      case TableKind.MaterializedView =>
-        val i = ddl.indexOf(" TO ")
-        if (i < 0) ddl
-        else ddl.substring(0, i + 1) + clause + ddl.substring(i + 1)
-      case _ =>
-        val i = ddl.indexOf('(')
-        if (i < 0) ddl
-        else ddl.substring(0, i) + clause + ddl.substring(i)
-    }
-  }
-
   /** `CREATE TABLE` / `CREATE MATERIALIZED VIEW` → idempotent form
     * (reference `sharding_recreation.py:72,85,96`).
     */
@@ -83,12 +64,4 @@ object DdlRewriter {
         // versioned dist façade reads the renamed old locals
         Some(retargetAtOldLocal(versionSuffix(ifNotExists(ddl), db, name, version), name))
     }
-
-  /** Old-name → versioned-name rename plan over a catalog listing, skipping
-    * MV inner tables (reference `sharding_recreation.py:44-46,105`).
-    */
-  def renamePlan(names: Seq[String], version: String): Map[String, String] =
-    names.filter(TableKind.classify(_) != TableKind.Inner)
-      .map(n => n -> s"$n$version")
-      .toMap
 }

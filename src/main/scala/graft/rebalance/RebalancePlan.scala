@@ -20,9 +20,10 @@ import graft.model.TableKind
   * planner emits an explicit [[ManualMvStep]] marker instead so callers see
   * the gap rather than silently losing views.
   *
-  * Planning is driver-local over a small collected snapshot; execution (the
-  * interpreter in [[RebalanceRunner]]) is where the single shuffle per
-  * redistributed table happens.
+  * This is the ClickHouse-shaped rendering of a pass, driver-local over a
+  * small collected snapshot. Nothing executes it: the benchmark reads it,
+  * and [[RebalanceRunner.rebalanceDatabase]] selects and swaps tables on
+  * its own ([[RebalanceRunner.targets]], [[ShadowSwap]]).
   */
 object RebalancePlan {
 

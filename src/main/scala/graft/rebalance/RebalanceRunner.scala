@@ -1,7 +1,6 @@
 package graft.rebalance
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 import graft.catalog.TableRegistry
 
@@ -10,24 +9,23 @@ import graft.catalog.TableRegistry
   * In Spark the reference's local/distributed table split collapses
   * (SURVEY.md §1.2): per-shard `_local` tables become partitions of one
   * catalog table, and the distributed façade is the table itself. The
-  * workflow therefore reduces to the reference's shadow-swap discipline
-  * (reference `sharding_recreation.py:306-342`) applied per table:
-  *
-  *   1. write a redistributed shadow `table__v{n}` (one shuffle — the O18
-  *      data move, reference `sharding_recreation.py:159-160`);
-  *   2. metadata-only renames: `table` → `table__old`, shadow → `table`
-  *      (reference O16/O17, `sharding_recreation.py:212-249`);
-  *   3. drop `table__old` (reference O19, `sharding_recreation.py:194-209`).
+  * workflow therefore reduces to one [[ShadowSwap]] per table (reference
+  * `sharding_recreation.py:306-342`): the stage `table__v{n}` is written
+  * redistributed (one shuffle — the O18 data move, reference
+  * `sharding_recreation.py:159-160`), then renamed in place of `table`
+  * with `table__old` as the interim name (reference O16/O17/O19).
   *
   * The canonical name always fronts either complete-old or complete-new
-  * data — fixing the reference's non-atomic INSERT window. Every step is
-  * guarded/idempotent like the reference's `IF NOT EXISTS` / `EXISTS`
-  * probes. At 100 TB the only data movement is step 1's shuffle; AQE
-  * handles skewed shard keys.
+  * data — fixing the reference's non-atomic INSERT window — and a rerun
+  * after a crash at any step finishes the swap. At 100 TB the only data
+  * movement is the shuffle; AQE handles skewed shard keys.
   */
 object RebalanceRunner {
 
-  /** Rebalance one catalog table in place; returns the row count moved. */
+  /** Rebalance one catalog table in place; returns the row count moved.
+    * A table stranded by a crashed swap (canonical name vacant, stage or
+    * old copy present) is recovered first, then rebalanced like any other.
+    */
   def rebalanceTable(
       spark: SparkSession,
       db: String,
@@ -35,41 +33,12 @@ object RebalanceRunner {
       dist: Rebalancer.Distribution,
       shards: Int,
       version: String): Long = {
-
     val fq = s"$db.$table"
-    val shadow = s"$db.${table}__v$version"
-    val old = s"$db.${table}__old"
-    // crash recovery: a death between the two renames below leaves the
-    // canonical name vacant with the completed shadow still present —
-    // finish the promotion instead of failing the existence check
-    if (!TableRegistry.exists(spark, db, table) &&
-        TableRegistry.exists(spark, db, s"${table}__v$version")) {
-      spark.sql(s"ALTER TABLE $shadow RENAME TO $fq")
-      spark.sql(s"DROP TABLE IF EXISTS $old")
-      return spark.table(fq).count()
-    }
-    require(TableRegistry.exists(spark, db, table), s"no such table: $fq")
-
-    val src = spark.table(fq)
-    val shaped = dist match {
-      case Rebalancer.ByHash(key)  => src.repartition(shards, col(key))
-      case Rebalancer.ByRange(key) => src.repartitionByRange(shards, col(key))
-      case Rebalancer.RoundRobin   => src.repartition(shards)
-    }
-    // shadow write: full new copy lands before any rename touches `table`.
-    // The moved-row count rides the write pass via observe() — a separate
-    // post-write count() would re-scan the whole shadow (the cost
-    // Rebalancer.redistribute documents avoiding at 100 TB)
-    val obs = new org.apache.spark.sql.Observation()
-    shaped.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).saveAsTable(shadow)
-    val moved = obs.get("n").asInstanceOf[Long]
-
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    spark.sql(s"ALTER TABLE $fq RENAME TO $old")
-    spark.sql(s"ALTER TABLE $shadow RENAME TO $fq")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    moved
+    val ns = ShadowSwap.catalog(spark)
+    val n = ShadowSwap.versioned(fq, version)
+    require(Seq(n.target, n.stage, n.old).exists(ns.exists), s"no such table: $fq")
+    ShadowSwap.swap(ns, n)(stage =>
+      Rebalancer.written(spark.table(fq), dist, shards)(_.saveAsTable(stage)))
   }
 
   /** O20 destructive rollback (reference `sharding_recreation.py:27-41`,
@@ -82,8 +51,7 @@ object RebalanceRunner {
     *     is irreversible);
     *   - never drops a shadow whose canonical base table is vacant: after
     *     a crash between the two promotion renames the shadow is the ONLY
-    *     complete copy, and [[rebalanceTable]]'s recovery branch promotes
-    *     it instead.
+    *     complete copy, and [[rebalanceTable]] promotes it instead.
     *
     * Returns the table names actually dropped.
     */
@@ -97,11 +65,9 @@ object RebalanceRunner {
         "pass force=true to confirm")
     val victims = TableRegistry.tableNames(spark, db)
       .filter(_.endsWith(s"__v$version"))
-    val droppable = victims.filter { n =>
-      val base = n.substring(0, n.lastIndexOf("__v"))
-      TableRegistry.exists(spark, db, base)
-    }
-    droppable.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $db.$n"))
+    val droppable = victims.filter(n =>
+      spark.catalog.tableExists(s"$db.${n.stripSuffix(s"__v$version")}"))
+    droppable.foreach(n => ShadowSwap.catalog(spark).drop(s"$db.$n"))
     droppable
   }
 
@@ -111,14 +77,30 @@ object RebalanceRunner {
     */
   final case class MvDef(name: String, sql: String)
 
+  /** The tables a whole-database pass under `version` rebalances, from
+    * one catalog listing `names`: every canonical table (neither swap
+    * residue nor an MV), plus every vacant table whose swap left its stage
+    * `X__v<version>` or its old copy `X__old` behind — without these a
+    * crash between the two renames makes `X` vanish from every later pass.
+    * A stage of another version (`X__v72` on a version-7 pass) is left
+    * alone: it is not this pass's to promote.
+    */
+  def targets(names: Seq[String], mvNames: Set[String], version: String): Seq[String] = {
+    val canonical = names.filterNot(n => ShadowSwap.isResidue(n) || mvNames(n))
+    val vacant = names.flatMap(ShadowSwap.versionedBase(_, version))
+      .filterNot(b => names.contains(b) || mvNames(b) || ShadowSwap.isResidue(b))
+    (canonical ++ vacant).distinct.sorted
+  }
+
   /** Rebalance every data table in a database (the reference's whole-db
-    * workflow), returning table → rows moved.
+    * workflow): one [[rebalanceTable]] per [[targets]] entry, returning
+    * table → rows moved.
     *
     * `recreateMvs` goes one step beyond the reference, whose MV handling is
     * an explicit TODO (reference `sharding_recreation.py:258-266,337` —
     * views are neither moved nor recreated): with `recreateMvs = true`,
     * after every base-table swap completes each `MvDef` is re-evaluated
-    * against the new canonical tables and swapped into place atomically
+    * against the new canonical tables and swapped into place
     * ([[graft.streaming.MaterializedView.refresh]]), so MVs are consistent
     * with the rebalanced data. MV tables themselves are excluded from the
     * data-table pass — they are derived state, rebuilt rather than moved.
@@ -131,29 +113,7 @@ object RebalanceRunner {
       version: String,
       mvs: Seq[MvDef] = Nil,
       recreateMvs: Boolean = false): Map[String, Long] = {
-    val names = TableRegistry.tableNames(spark, db)
-    val mvNames = mvs.map(_.name).toSet
-    // `__mv_stage`/`__mv_old` are MaterializedView shadow-swap residue (a
-    // crashed refresh leaves them behind); without the explicit exclusion
-    // they'd classify as canonical base tables and get rebalanced/retained
-    // forever. `__v`/`__old` matching covers the base-table swap residue.
-    val isResidue = (n: String) =>
-      n.contains("__v") || n.endsWith("__old") ||
-        n.endsWith("__mv_stage") || n.endsWith("__mv_old")
-    val canonical = names.filterNot(n => isResidue(n) || mvNames.contains(n))
-    // a crash between rebalanceTable's two renames strands a table with the
-    // canonical name vacant and only `t__v{n}` / `t__old` present; surface
-    // those bases too so the recovery branch in rebalanceTable finishes the
-    // promotion instead of the table silently vanishing from whole-db runs
-    // exact `__v$version` SUFFIX match: contains() would collect version
-    // "12"/"10" residue on a version-"1" run, whose recovery then fails
-    // the whole-db pass on the vacant canonical name
-    val suffix = s"__v$version"
-    val orphaned = names.collect {
-      case n if n.endsWith(suffix) => n.substring(0, n.length - suffix.length)
-    }.filterNot(n => canonical.contains(n) || mvNames.contains(n) || isResidue(n))
-      .distinct
-    val moved = (canonical ++ orphaned)
+    val moved = targets(TableRegistry.tableNames(spark, db), mvs.map(_.name).toSet, version)
       .map(t => t -> rebalanceTable(spark, db, t, dist(t), shards, version))
       .toMap
     if (recreateMvs) mvs.foreach { mv =>

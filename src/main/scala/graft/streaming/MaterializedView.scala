@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.rebalance.ShadowSwap
 
 /** Continuous materialized-view maintenance — the piece the reference leaves
   * as a manual TODO (MVs are never created or populated automatically,
@@ -10,8 +12,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * aggregation kept up to date in a catalog table via per-micro-batch keyed
   * upsert.
   *
-  * Refresh discipline reuses the rebalance shadow-swap (stage table →
-  * metadata-only renames): a reader never observes a PARTIAL batch — any
+  * Every refresh and upsert is one [[ShadowSwap]] over `__mv_stage` /
+  * `__mv_old` (stage table → metadata-only renames), the same primitive
+  * the rebalance uses: a reader never observes a PARTIAL batch — any
   * snapshot it resolves is complete. The swap is not fully atomic for
   * concurrent readers, though: between the two renames the canonical name
   * is briefly vacant (TABLE_OR_VIEW_NOT_FOUND), and a reader mid-scan of
@@ -29,25 +32,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object MaterializedView {
 
-  /** Crash recovery for the shadow-swap: a death between `RENAME target TO
-    * __mv_old` and `RENAME __mv_stage TO target` leaves the canonical name
-    * vacant while the stage table holds the COMPLETE next snapshot —
-    * promote it (the same discipline as
-    * [[graft.rebalance.RebalanceRunner.rebalanceTable]]'s recovery branch).
-    * Without this, a post-crash [[upsert]] would take the create branch and
-    * seed the MV from one batch, silently dropping all merged history.
-    * Always clears `__mv_old` residue. Idempotent; called by both [[upsert]]
-    * and [[refresh]] before they touch anything.
+  /** Finish a crashed swap of `target`; [[upsert]] and [[refresh]] do it
+    * themselves, callers that read `target` before an upsert call it.
     */
-  def recover(spark: org.apache.spark.sql.SparkSession, target: String): Unit = {
-    val stage = s"${target}__mv_stage"
-    val old = s"${target}__mv_old"
-    if (!spark.catalog.tableExists(target) && spark.catalog.tableExists(stage))
-      spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-  }
+  def recover(spark: SparkSession, target: String): Unit =
+    ShadowSwap.recover(ShadowSwap.catalog(spark), ShadowSwap.mv(target))
 
-  /** One keyed upsert: rows of `batch` replace same-key rows of `target`.
+  /** One keyed upsert: rows of `batch` replace same-key rows of `target`;
+    * the first batch seeds it.
     *
     * `snapshotPartitions` sizes the rewritten snapshot: an MV is orders of
     * magnitude smaller than its stream, but the merged frame inherits the
@@ -60,63 +52,35 @@ object MaterializedView {
   def upsert(batch: DataFrame, keyCols: Seq[String], target: String,
       snapshotPartitions: Int = 0): Unit = {
     val spark = batch.sparkSession
-    recover(spark, target)
-    def sized(df: DataFrame) =
-      if (snapshotPartitions > 0) df.repartition(snapshotPartitions) else df
-    if (!spark.catalog.tableExists(target)) {
-      sized(batch).write.mode(SaveMode.ErrorIfExists).saveAsTable(target)
-    } else {
-      val stage = s"${target}__mv_stage"
-      val old = s"${target}__mv_old"
-      // the merged plan reads `batch` twice (anti-join keys + union side);
-      // without a cache each micro-batch recomputes its upstream
-      // aggregation twice per refresh
-      batch.persist()
-      val merged = spark.table(target)
-        .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(batch)
-      try sized(merged).write.mode(SaveMode.Overwrite).saveAsTable(stage)
+    ShadowSwap.swap(ShadowSwap.catalog(spark), ShadowSwap.mv(target)) { stage =>
+      // after recovery, so a crashed swap's snapshot is merged into, not
+      // replaced by, this batch
+      val merged =
+        if (!spark.catalog.tableExists(target)) batch
+        else {
+          // the merged plan reads `batch` twice (anti-join keys + union
+          // side); without a cache each micro-batch recomputes its
+          // upstream aggregation twice per refresh
+          batch.persist()
+          spark.table(target)
+            .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
+            .unionByName(batch)
+        }
+      val sized = if (snapshotPartitions > 0) merged.repartition(snapshotPartitions) else merged
+      try sized.write.mode(SaveMode.Overwrite).saveAsTable(stage)
       finally batch.unpersist()
-      spark.sql(s"DROP TABLE IF EXISTS $old")
-      spark.sql(s"ALTER TABLE $target RENAME TO $old")
-      spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-      spark.sql(s"DROP TABLE IF EXISTS $old")
-      // drop the cached file listing from before the swap, or readers keep
-      // resolving the canonical name to the deleted pre-swap part files.
-      // foreachBatch runs on a cloned session with its own relation cache,
-      // so refresh the user's default session as well.
-      spark.catalog.refreshTable(target)
-      org.apache.spark.sql.classic.SparkSession.getDefaultSession
-        .filter(_ ne spark)
-        .foreach(_.catalog.refreshTable(target))
     }
   }
 
   /** Full MV rebuild through the same shadow-swap: `df` (the MV definition
-    * re-evaluated against current base tables) REPLACES the MV contents
-    * atomically. Used by the rebalance workflow's opt-in MV recreation —
-    * after base tables swap, their MVs are recomputed against the new
-    * canonical tables.
+    * re-evaluated against current base tables) REPLACES the MV contents.
+    * Used by the rebalance workflow's opt-in MV recreation — after base
+    * tables swap, their MVs are recomputed against the new canonical
+    * tables.
     */
-  def refresh(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
-    val stage = s"${target}__mv_stage"
-    val old = s"${target}__mv_old"
-    recover(spark, target)
-    df.write.mode(SaveMode.Overwrite).saveAsTable(stage)
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    if (spark.catalog.tableExists(target))
-      spark.sql(s"ALTER TABLE $target RENAME TO $old")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $target")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    // same cross-session cache refresh as upsert: if this ran on a cloned
-    // session, the default session's cached file listing still points at
-    // the deleted pre-swap part files
-    spark.catalog.refreshTable(target)
-    org.apache.spark.sql.classic.SparkSession.getDefaultSession
-      .filter(_ ne spark)
-      .foreach(_.catalog.refreshTable(target))
-  }
+  def refresh(df: DataFrame, target: String): Unit =
+    ShadowSwap.swap(ShadowSwap.catalog(df.sparkSession), ShadowSwap.mv(target))(
+      df.write.mode(SaveMode.Overwrite).saveAsTable(_))
 
   /** Start continuous materialization of a (usually aggregated) stream into
     * catalog table `target`, keyed by `keyCols`. Update output mode: each

@@ -9,21 +9,6 @@ class DdlRewriterSpec extends AnyFunSuite {
   val distDdl = "CREATE TABLE db.events (id BIGINT, v DOUBLE) ENGINE = Distributed('c', 'db', 'events_local', rand())"
   val mvDdl = "CREATE MATERIALIZED VIEW db.events_mv TO db.agg_local AS SELECT id, sum(v) FROM db.events_local GROUP BY id"
 
-  test("ON CLUSTER splice: plain table before first paren") {
-    val out = addOnCluster("events_local", localDdl, "main")
-    assert(out.startsWith("CREATE TABLE db.events_local ON CLUSTER 'main' (id BIGINT"))
-  }
-
-  test("ON CLUSTER splice: MV before TO clause") {
-    val out = addOnCluster("events_mv", mvDdl, "main")
-    assert(out.contains("db.events_mv ON CLUSTER 'main' TO db.agg_local"))
-  }
-
-  test("ON CLUSTER splice: MV without TO passes through unchanged") {
-    val noTo = "CREATE MATERIALIZED VIEW db.x_mv AS SELECT 1"
-    assert(addOnCluster("x_mv", noTo, "main") == noTo)
-  }
-
   test("ifNotExists is idempotent and kind-aware") {
     assert(ifNotExists(localDdl).startsWith("CREATE TABLE IF NOT EXISTS db.events_local"))
     assert(ifNotExists(ifNotExists(localDdl)) == ifNotExists(localDdl))
@@ -88,10 +73,5 @@ class DdlRewriterSpec extends AnyFunSuite {
     assert(o2.contains("'sales_local_old'"), o2)
     assert(o2.contains("retail_sales_local"), o2)
     assert(!o2.contains("retail_sales_local_old"), o2)
-  }
-
-  test("renamePlan skips inner tables") {
-    val plan = renamePlan(Seq("a_local", "a", ".inner.a_mv", "a_mv"), "3")
-    assert(plan == Map("a_local" -> "a_local3", "a" -> "a3", "a_mv" -> "a_mv3"))
   }
 }
